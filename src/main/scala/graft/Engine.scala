@@ -23,8 +23,11 @@ object Engine {
     * bounded (region=5, nation=25) regardless of scale factor. */
   val alwaysBroadcast: Set[String] = Set("region", "nation")
 
-  def session(appName: String = "graft", master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local cores: SPARK_GRAFT_CPUS when set, else every available core. */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  def session(appName: String = "graft", master: String = s"local[$cpus]"): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
@@ -45,38 +48,22 @@ object Engine {
       // sort-based aggregation (set here once — operators must not
       // mutate shared-session conf per call)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // allow the planner to pick a shuffled-hash join when its size
-      // conditions hold instead of defaulting to sort-merge (round 13):
-      // the hot dedup joins are fixed-width hash-keyed streams where
-      // SHJ skips two sorts; the build side stays bounded (df caps,
-      // candidate caps). The AQE threshold additionally converts an
-      // SMJ to SHJ at runtime when every post-shuffle build partition
-      // is under 64 MB — bounded memory at any scale since partition
-      // counts grow with input under AQE. Both env-overridable for
-      // cluster tuning.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP_MAX", "64m"))
-      // NEGATIVE RESULT (round 14): size-first AQE coalescing
-      // (parallelismFirst=false, advisory 8m or 64m) was hypothesized
-      // to fix the 8-core-beats-32-core inversion (tiny stages
-      // scheduling 32 near-empty tasks) and measured WORSE on a clean
-      // paired A/B over 16 representative queries: size-first at 8m
-      // lost 28% overall (17.9 s vs 14.0 s), with CPU-bound mid-size
-      // stages starved of parallelism (dedup_cluster_lsh 1.93 → 2.84,
-      // orders_basket_pairs 1.50 → 2.29, pipeline_contamination_score
-      // 0.78 → 1.24); its only wins were a few milliseconds on
-      // kilobyte-sized stages. Local stages are CPU-bound, not
-      // byte-bound, so bytes are the wrong coalescing signal here.
-      // Spark defaults kept; both knobs stay env-overridable because
-      // on a REAL cluster (guide §2.2: 100 MB-1 GB reduce partitions)
-      // size-first with a large advisory is the right posture — that
-      // decision tracks per-node memory/network, not this sandbox.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
+      // let the planner pick a shuffled-hash join when its size
+      // conditions hold: the hot dedup joins are fixed-width hash-keyed
+      // streams where SHJ skips two sorts, and their build sides are
+      // bounded (df caps, candidate caps). AQE also converts an SMJ to
+      // SHJ when every post-shuffle build partition is under 64 MB —
+      // bounded memory at any scale, since partition counts grow with
+      // input under AQE.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+      // parallelism-first coalescing: local stages are CPU-bound, not
+      // byte-bound, so bytes are the wrong coalescing signal here
+      // (size-first at an 8m advisory measured 28% slower over 16
+      // representative queries). On a real cluster, size-first with a
+      // large advisory is the right posture.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -130,13 +130,13 @@ object SimilarityOps {
 
   /** Bounded (≤10k) training sample in deterministic id-hash order —
     * the shared quantizer-training posture (see [[semanticDedupFrom]]):
-    * k-means needs O(k·10³) points, never the corpus. */
+    * k-means needs O(k·10³) points, never the corpus. Every trainer
+    * draws the same sample (ids whose hash is 0 mod 4). */
   private def lloydSample(sp: SparkSession, all: DataFrame,
-      modKnob: String, fallbackK: Int): Array[Array[Double]] = {
+      fallbackK: Int): Array[Array[Double]] = {
     import sp.implicits._
-    val sampleMod = sp.conf.getOption(modKnob).map(_.toInt).getOrElse(4)
     val hashSample = all
-      .filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0)
+      .filter(pmod(xxhash64(col("vec_id")), lit(4)) === 0)
       .select(xxhash64(col("vec_id")).as("ord"), col("v"))
       .orderBy(col("ord")).limit(10000)
       .select("v").as[Seq[Double]].collect().map(_.toArray)
@@ -319,18 +319,13 @@ object SimilarityOps {
     val all = vecs(sp, dir)
     val nVecs = all.count()
     val k = math.max(16, math.round(math.sqrt(nVecs.toDouble) / 3.0).toInt)
-    // probes cover ~half the lists by default: the testdata embeddings
+    // probes cover ~half the lists: the testdata embeddings
     // are UNIFORM RANDOM — the worst case for any space partitioner
     // (cosine mass concentrates, every cell borders the query cone) —
     // and half-probing is what recall@5 ≥ 0.8 costs there (measured at
     // the 10× corpus: ⅓ → 0.70, ½ → 0.84, ⅔ → 0.94). Real embedding
-    // corpora cluster, so the same recall needs a far smaller fraction
-    // — the knob mirrors `graft.pq.shortlistFrac`'s argument.
-    val nProbe = sp.conf.getOption("graft.ivf.probeLaw").getOrElse("half") match {
-      case "third"    => math.max(4, (k + 2) / 3)
-      case "twothird" => math.max(4, (2 * k + 2) / 3)
-      case _          => math.max(4, (k + 1) / 2)
-    }
+    // corpora cluster, so the same recall needs a far smaller fraction.
+    val nProbe = math.max(4, (k + 1) / 2)
     // train the coarse quantizer with driver-side Lloyd on a bounded
     // hash sample — k-means needs O(k·10³) points, never the corpus,
     // and the local loop replaces ~15 scheduled jobs per MLlib fit
@@ -340,7 +335,7 @@ object SimilarityOps {
     // `sampleIn` lets a composed op (annIvfPq) hand in the one sample
     // it already collected — identical rows, one sample job fewer.
     val sample = if (sampleIn != null) sampleIn
-      else lloydSample(sp, all, "graft.ivf.sampleMod", k)
+      else lloydSample(sp, all, k)
     // SPHERICAL k-means: the ANN metric is cosine, so the quantizer
     // clusters UNIT vectors — Euclidean Voronoi cells on the sphere
     // are exactly cosine Voronoi cells. Clustering the raw
@@ -479,7 +474,7 @@ object SimilarityOps {
     // would schedule 5 distributed jobs just to iterate a 500-point
     // sample. Deterministic: sample by id hash, seeds = first k in
     // hash order.
-    val sample = lloydSample(sp, all, "graft.ivf.sampleMod", k)
+    val sample = lloydSample(sp, all, k)
     val cents = localLloyd(sample, k, 5)
     val assigned = all.select(col("vec_id"), col("v"), col("nrm"))
       .as[(Long, Seq[Double], Double)]
@@ -620,7 +615,7 @@ object SimilarityOps {
     // the prior shape (8 sequential MLlib fits over the same sample)
     // spent ~19 s of pure job-scheduling overhead at any SF
     val sample = if (sampleIn != null) sampleIn
-      else lloydSample(sp, vecs(sp, dir), "graft.pq.sampleMod", PqK)
+      else lloydSample(sp, vecs(sp, dir), PqK)
     (0 until PqM).map { m =>
       val sub = sample.map(v =>
         java.util.Arrays.copyOfRange(v, m * PqSub, (m + 1) * PqSub))
@@ -714,14 +709,10 @@ object SimilarityOps {
     * (10%) is what UNIFORM RANDOM vectors need for recall@5 ≈ 0.6 —
     * the hardest case for PQ, whose codes exploit cluster structure;
     * real embedding corpora sustain the same recall at a far smaller
-    * fraction, so it is a conf knob (`graft.pq.shortlistFrac`), and
-    * the sublinear path composes the IVF lists to shrink the scored
-    * pool itself. */
-  def pqShortlist(sp: SparkSession, n: Long): Int = {
-    val frac = sp.conf.getOption("graft.pq.shortlistFrac")
-      .map(_.toDouble).getOrElse(0.1)
-    math.max(PqShortlistMin, math.ceil(n * frac).toInt)
-  }
+    * fraction, and the sublinear path composes the IVF lists to shrink
+    * the scored pool itself. */
+  def pqShortlist(n: Long): Int =
+    math.max(PqShortlistMin, math.ceil(n * 0.1).toInt)
 
   /** Per-(query, subspace, centroid) dot table for ADC scoring: the
     * query stays in float space; each corpus vector's ADC score is a
@@ -780,7 +771,7 @@ object SimilarityOps {
 
   def annPq(sp: SparkSession, dir: String): DataFrame = {
     val books = pqCodebooks(sp, dir)
-    val shortlistN = pqShortlist(sp, vecs(sp, dir).count())
+    val shortlistN = pqShortlist(vecs(sp, dir).count())
     val enc = pqEncodeRaw(sp, dir, books)
       .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
     val q = vecs(sp, dir).filter(col("vec_id") < 10)
@@ -804,16 +795,11 @@ object SimilarityOps {
     * second k-means sweep at this code budget. Approximate →
     * recall-gated (QualityGates + ScaleBench), no SQL oracle. */
   def annIvfPq(sp: SparkSession, dir: String): DataFrame = {
-    // the IVF and PQ trainers draw the SAME deterministic hash sample
-    // whenever their mod knobs agree (they default equal): collect it
-    // once and hand it to both — one sample scan+sort job fewer per
-    // invocation, identical rows, so lists/codes are bit-unchanged.
-    // (ivfRouting normalizes its copy itself; pq trains on raw.)
-    val shared =
-      if (sp.conf.getOption("graft.ivf.sampleMod").getOrElse("4") ==
-          sp.conf.getOption("graft.pq.sampleMod").getOrElse("4"))
-        lloydSample(sp, vecs(sp, dir), "graft.ivf.sampleMod", PqK)
-      else null
+    // the IVF and PQ trainers draw the SAME deterministic hash sample:
+    // collect it once and hand it to both — one sample scan+sort job
+    // fewer per invocation. (ivfRouting normalizes its copy itself; pq
+    // trains on raw.)
+    val shared = lloydSample(sp, vecs(sp, dir), PqK)
     val (assigned, qProbes, nVecs) = ivfRouting(sp, dir, shared)
     val books = pqCodebooks(sp, dir, shared)
     // 2× the standalone-PQ shortlist fraction: the composed op's ADC
@@ -821,7 +807,7 @@ object SimilarityOps {
     // still bounded by the same corpus fraction — and the extra width
     // recovers the pairs PQ noise pushes just past the standalone cut
     // (measured 10× recall 0.80 → 0.82, against the pool's 0.84 cap)
-    val shortlistN = 2 * pqShortlist(sp, nVecs)
+    val shortlistN = 2 * pqShortlist(nVecs)
     // candidate pool: corpus vectors in the probed lists only — the
     // self-pair is dropped in adcShortlist's join condition
     val cand = qProbes.select(col("query_id").as("cand_query_id"), col("cid"))
@@ -1953,9 +1939,7 @@ object SimilarityOps {
       .toDF("vec_id", "pc1")
   }
 
-  /** Cluster count / Lloyd sweeps for [[kmeans]]; k is
-    * conf-overridable (`spark.graft.kmeans.k`) because the right
-    * cluster granularity is a corpus property, not an engine one. */
+  /** Cluster count / Lloyd sweeps for [[kmeans]]. */
   val KmeansK = 16
   val KmeansIters = 5
 
@@ -1979,11 +1963,9 @@ object SimilarityOps {
       : (Array[Array[Double]], Array[Double]) = {
     import sp.implicits._
     val d = Dim
-    val k = sp.conf.getOption("spark.graft.kmeans.k")
-      .map(_.toInt).getOrElse(KmeansK)
+    val k = KmeansK
     val all = vecs(sp, dir)
-    val seeds = kppSeeds(
-      lloydSample(sp, all, "spark.graft.kmeans.sampleMod", k), k)
+    val seeds = kppSeeds(lloydSample(sp, all, k), k)
     var cents = seeds
     val inertias = new Array[Double](KmeansIters)
     // cache the projected vectors across the sweeps: every iteration

@@ -228,7 +228,7 @@ object EnumBench {
             System.err.println(f"[enumbench] $name%-34s $shape%-6s n=$n%-3d TIMEOUT (> $budgetMs ms)")
           } else {
             val times = ms0 +: (2 to Reps).map(_ => timedRun(en, g, budgetMs)._1)
-            val med = times.sorted.apply(times.length / 2)
+            val med = Measure.median(times)
             results += Res(name, shape, n, med, timeout = false, cost0)
             System.err.println(f"[enumbench] $name%-34s $shape%-6s n=$n%-3d $med%10.2f ms")
           }

@@ -1,26 +1,22 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
 import graft.{Engine, SparkEntry}
-import org.apache.spark.sql.SparkSession
+import graft.operators.SimilarityOps
 
 /** Record the HNSW recall/latency curve behind the committed
   * `hnswEfFor` step schedule: sweep the search beam width at the
   * base corpus AND the 100× ScaleBench corpus (recall decays with
   * corpus size at fixed ef, so the operating point must be justified
   * where it is weakest), scoring recall@5 against brute force and
-  * timing the full op (build + search) like ScaleBench does.
+  * timing the full op (build + search) as median cold reps.
   *
   * Usage: `runMain graft.tools.HnswCurve [baseDir] [scratchDir] [out]
   * [efList]`. Defaults: /root/testdata/sf0.1, /tmp/graft_scale/x100
   * (must already be derived — run ScaleBench first), HNSW_CURVE.json,
   * 32,64,128,256. Writes one JSON object per (corpus, ef) cell. */
 object HnswCurve {
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-  }
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
@@ -38,26 +34,19 @@ object HnswCurve {
     def cell(dir: String, ef: Int): (Double, Double) = {
       val bf = pairs(SparkEntry.queries("sim_knn_bruteforce")(spark, dir))
       spark.sharedState.cacheManager.clearCache()
-      def run() = graft.operators.SimilarityOps.annHnswWith(spark, dir, Some(ef))
+      def run() = SimilarityOps.annHnswWith(spark, dir, Some(ef))
       val got = pairs(run())
       val recall =
         if (bf.isEmpty) 1.0 else (got & bf).size.toDouble / bf.size
       spark.sharedState.cacheManager.clearCache()
-      run().write.format("noop").mode("overwrite").save() // warm-up
-      val wall = median((1 to reps).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime
-        run().write.format("noop").mode("overwrite").save()
-        (System.nanoTime - t0) / 1e9
-      })
-      (recall, wall)
+      def rep() = Measure.coldRep(spark)(run())._1
+      rep() // untimed warm-up
+      (recall, Measure.median((1 to reps).map(_ => rep())))
     }
 
     def fmt(d: Double) = f"$d%.4f"
     val corpora = Seq("base" -> baseDir, "x100" -> scratch)
-      .filter { case (_, d) =>
-        java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$d/embeddings.parquet")) }
+      .filter { case (_, d) => Files.exists(Paths.get(s"$d/embeddings.parquet")) }
     val body = corpora.map { case (tag, dir) =>
       val cells = efs.map { ef =>
         val (recall, wall) = cell(dir, ef)
@@ -67,12 +56,12 @@ object HnswCurve {
       }
       s""""$tag":{"dir":"$dir",${cells.mkString(",")}}"""
     }
-    val json = s"""{"m":${graft.operators.SimilarityOps.HnswM},""" +
-      s""""ef_construction":${graft.operators.SimilarityOps.HnswEfConstruction},""" +
-      s""""shard_rows":${graft.operators.SimilarityOps.HnswShardRows},""" +
+    val json = s"""{"m":${SimilarityOps.HnswM},""" +
+      s""""ef_construction":${SimilarityOps.HnswEfConstruction},""" +
+      s""""shard_rows":${SimilarityOps.HnswShardRows},""" +
       s""""ef_schedule":"n<=65536:64, else:256 (hnswEfFor)",""" +
       body.mkString(",") + "}"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
+    Files.writeString(Paths.get(outPath), json)
     println(json)
     spark.stop()
   }
