@@ -407,12 +407,7 @@ object DedupOps {
     // filter are bit-identical to the window form. ANY collision (or
     // a hot/cool string pair sharing a hash) flips to the string-keyed
     // slow branch below, which reproduces round 13's exact semantics.
-    val dfTab = shinglesSetFrom(sp, docsIn)
-      .select(keyFn(col("shingle")).as("k"), col("shingle"))
-      .groupBy(col("k"), col("shingle")).agg(count(lit(1)).as("dfs"))
-      .groupBy(col("k")).agg(sum(col("dfs")).as("df"),
-        count(lit(1)).as("nv"), min(col("shingle")).as("shingle"))
-      .cache()
+    val dfTab = containmentDfTab(sp, docsIn, keyFn).cache()
     // the only driver action in the op (multiK.isEmpty in round 13 —
     // same job count, but now a filter over the vocab-sized pin
     // instead of an aggregate over a corpus-sized one)
@@ -444,6 +439,8 @@ object DedupOps {
       // STRING-KEYED SLOW BRANCH — genuinely colliding vocabularies
       // only (the spec's weak-key fixture): round 13's window shape
       // verbatim, exact per-(k, shingle) df and the 4-join split.
+      // It never reads dfTab, so the pin is released here.
+      dfTab.unpersist()
       val sh = shinglesSetFrom(sp, docsIn)
         .select(col("doc_id"), keyFn(col("shingle")).as("k"), col("shingle"))
         .withColumn("df", count(lit(1))
@@ -485,6 +482,18 @@ object DedupOps {
           .select(col("doc_a"), col("doc_b"), col("den"))))
     }
   }
+
+  /** Per-hash vocabulary of [[containmentKeyed]]: df = Σ per-string
+    * document counts, nv = distinct strings under the hash, and the
+    * string itself (min, THE string when nv == 1). Uncached; the
+    * caller pins it. */
+  private[graft] def containmentDfTab(sp: SparkSession, docsIn: DataFrame,
+      keyFn: Column => Column): DataFrame =
+    shinglesSetFrom(sp, docsIn)
+      .select(keyFn(col("shingle")).as("k"), col("shingle"))
+      .groupBy(col("k"), col("shingle")).agg(count(lit(1)).as("dfs"))
+      .groupBy(col("k")).agg(sum(col("dfs")).as("df"),
+        count(lit(1)).as("nv"), min(col("shingle")).as("shingle"))
 
   /** Shared tail of both [[containmentKeyed]] branches: directed-pair
     * intersection counts over the mention stream, then the threshold. */

@@ -105,7 +105,7 @@ object JoinReorder {
   /** Connectivity of two subtrees via precomputed neighbor bitmasks —
     * OR the left side's adjacency rows, intersect with the right's
     * membership mask. Popcount-bounded, no edge scan, no Set ops. */
-  private def connectedTrees(g: JoinGraph, l: JoinTree, r: JoinTree): Boolean =
+  private[graft] def connectedTrees(g: JoinGraph, l: JoinTree, r: JoinTree): Boolean =
     if (g.rels.length <= 64) {
       val adj = g.adjMask
       var rem = l.mask
@@ -135,7 +135,7 @@ object JoinReorder {
   @inline private def checkCancelled(): Unit =
     if (Thread.currentThread().isInterrupted) throw new EnumerationCancelled
 
-  private def joinedCard(g: JoinGraph, l: JoinTree, r: JoinTree): Double = {
+  private[graft] def joinedCard(g: JoinGraph, l: JoinTree, r: JoinTree): Double = {
     checkCancelled()
     joinedCard0(g, l, r)
   }
@@ -181,48 +181,63 @@ object JoinReorder {
     * (PlanEnumerator.cpp:92-93) — the plan space excludes cross
     * products (only PEall deliberately includes them, ref :33); on a
     * disconnected graph the gate is dropped so cross products remain
-    * reachable (cost still penalizes them). */
+    * reachable (cost still penalizes them).
+    *
+    * Subsets and splits are `Int` masks; `best` is indexed by mask.
+    * The split order decides ties, so plans are stable: equal-cost
+    * splits are common (filters do not change size estimates without
+    * CBO) and the first strict minimum wins. A subset's members are
+    * taken in the iteration order of the `Set[Int]` built from its
+    * combination, and its splits are visited in increasing order of
+    * the local mask over those members. */
   object DPsize extends PlanEnumerator {
     val name = "DPsize"
     def enumerate(g: JoinGraph): JoinTree = {
       val n = g.rels.length
-      val gate = n <= 30 && maskConnected(adjMaskOf(g), (1 << n) - 1)
-      val best = collection.mutable.Map.empty[Set[Int], JoinTree]
-      g.rels.foreach(r => best(Set(r.idx)) = Leaf(r))
-      for (size <- 2 to n) {
-        val subsets = (0 until n).combinations(size).map(_.toSet)
-        for (s <- subsets) {
-          var bestTree: JoinTree = null
-          // split into (left, right): iterate proper non-empty subsets
-          val members = s.toVector
-          val limit = 1 << members.length
-          var mask = 1
-          while (mask < limit - 1) {
-            val left = members.indices.collect {
-              case i if (mask & (1 << i)) != 0 => members(i)
-            }.toSet
-            val right = s -- left
-            // left always contains min(s): halves the enumeration,
-            // loses only the mirror tree (same cost under C_out)
-            if (left.contains(s.min)) {
-              (best.get(left), best.get(right)) match {
-                case (Some(lt), Some(rt)) =>
-                  // ref :92-93: skip disconnected splits on connected graphs
-                  if (!gate || connectedTrees(g, lt, rt)) {
-                    val card = joinedCard(g, lt, rt)
-                    val cand = Node(lt, rt, card)
-                    if (bestTree == null || cand.cost < bestTree.cost)
-                      bestTree = cand
-                  }
-                case _ => ()
-              }
+      require(n <= 30, "DPsize is exponential; guard small n")
+      val gate = maskConnected(adjMaskOf(g), (1 << n) - 1)
+      val best = new Array[JoinTree](1 << n)
+      g.rels.foreach(r => best(1 << r.idx) = Leaf(r))
+      // cost(m) == best(m).cost, so a losing split allocates no Node and
+      // walks no tree; leaves cost 0
+      val cost = new Array[Double](1 << n)
+      // leftOf(rest) = the lowest relation plus the members `rest` selects
+      val leftOf = new Array[Int](1 << n)
+      for (size <- 2 to n; comb <- (0 until n).combinations(size)) {
+        val members = comb.toSet.toVector
+        val s = members.foldLeft(0)((m, i) => m | (1 << i))
+        // the left side always holds the subset's lowest relation: halves
+        // the enumeration, loses only the mirror tree (same cost under
+        // C_out). Inserting that fixed bit into `rest` is monotone, so
+        // `rest` counts through exactly those local masks, in order.
+        val low = s & -s
+        val others = members.filter(i => (1 << i) != low)
+        val last = (1 << others.length) - 1 // left == s: no right side
+        leftOf(0) = low
+        var bestTree: JoinTree = null
+        var bestCost = 0.0
+        var rest = 0
+        while (rest < last) {
+          if (rest > 0) leftOf(rest) = leftOf(rest & (rest - 1)) |
+            (1 << others(Integer.numberOfTrailingZeros(rest)))
+          val left = leftOf(rest)
+          val right = s ^ left
+          val lt = best(left)
+          val rt = best(right)
+          // ref :92-93: skip disconnected splits on connected graphs
+          if (lt != null && rt != null && (!gate || connectedTrees(g, lt, rt))) {
+            val card = joinedCard(g, lt, rt)
+            val c = cost(left) + cost(right) + card
+            if (bestTree == null || c < bestCost) {
+              bestTree = Node(lt, rt, card); bestCost = c
             }
-            mask += 1
           }
-          if (bestTree != null) best(s) = bestTree
+          rest += 1
         }
+        best(s) = bestTree
+        cost(s) = bestCost
       }
-      best((0 until n).toSet)
+      best((1 << n) - 1)
     }
   }
 
@@ -315,7 +330,7 @@ object JoinReorder {
   // ---- shared bitmask helpers for the subset-DP / top-down family ----
 
   /** Adjacency as bitmasks: adjMask(i) = OR of 1<<j over neighbors j. */
-  private def adjMaskOf(g: JoinGraph): Array[Int] = {
+  private[graft] def adjMaskOf(g: JoinGraph): Array[Int] = {
     val a = new Array[Int](g.rels.length)
     g.edges.foreach { case (x, y, _) => a(x) |= 1 << y; a(y) |= 1 << x }
     a
@@ -335,7 +350,7 @@ object JoinReorder {
   }
 
   /** Is the relation set `m` connected under `adjMask`? */
-  private def maskConnected(adjMask: Array[Int], m: Int): Boolean = {
+  private[graft] def maskConnected(adjMask: Array[Int], m: Int): Boolean = {
     if (m == 0) return false
     val start = m & -m
     var seen = start

@@ -21,19 +21,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
       s"LSH recall too low: ${lsh.size}/${exact.size}")
   }
 
+  /** A pathological shingle key: ~25% of shingles crammed into 5 hash
+    * values, the rest keyed normally. */
+  private val weak: org.apache.spark.sql.Column => org.apache.spark.sql.Column = s =>
+    when(pmod(xxhash64(s), lit(4)) === 0, pmod(xxhash64(s), lit(5)))
+      .otherwise(xxhash64(s))
+
   test("shingle-key collision split reproduces string-keyed semantics under a colliding key") {
-    import org.apache.spark.sql.Column
     // The production join key is xxhash64 (expected colliding shingle
     // pairs ~V²/2⁶⁵ — unobservable), so the collision branch never
-    // carries rows in real runs. Force a pathological key — ~25% of
-    // shingles crammed into 5 hash values, the rest keyed normally —
-    // so BOTH the hash-only and the (k, shingle) join branches carry
-    // real rows, and demand row identity with the production output
-    // (which the CORRECTNESS harness pins to the string-keyed DuckDB
-    // oracle).
-    val weak: Column => Column = s =>
-      when(pmod(xxhash64(s), lit(4)) === 0, pmod(xxhash64(s), lit(5)))
-        .otherwise(xxhash64(s))
+    // carries rows in real runs. Force the `weak` key so BOTH the
+    // hash-only and the (k, shingle) join branches carry real rows,
+    // and demand row identity with the production output (which the
+    // CORRECTNESS harness pins to the string-keyed DuckDB oracle).
     def triples(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val refJ = triples(DedupOps.ngramJaccard(spark, sf))
@@ -46,6 +46,21 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(triples(DedupOps.containmentKeyed(spark, docs, pk, weak)) == ref,
         s"containment (probeK=$pk) rows diverge under a colliding shingle key")
     }
+  }
+
+  test("containment's string-keyed branch releases its unused vocabulary pin") {
+    val docs = Engine.table(spark, sf, "documents")
+    val cm = spark.sharedState.cacheManager
+    def dfTabCached = cm.lookupCachedData(DedupOps.containmentDfTab(spark, docs, weak)
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).nonEmpty
+    // control: a rebuilt vocabulary frame finds a cached one
+    val pinned = DedupOps.containmentDfTab(spark, docs, weak).cache()
+    assert(dfTabCached, "a rebuilt vocabulary frame does not match its cache entry")
+    pinned.unpersist(blocking = true)
+    assert(!dfTabCached)
+    // the colliding key takes the string-keyed branch, which never reads it
+    DedupOps.containmentKeyed(spark, docs, Some(DedupOps.ContainmentProbeK), weak).collect()
+    assert(!dfTabCached, "the string-keyed branch left the vocabulary frame cached")
   }
 
   test("binary-quantization ANN: exact twins rank first and the word packing is boundary-exact") {

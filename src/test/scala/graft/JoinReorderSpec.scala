@@ -569,16 +569,31 @@ class JoinReorderSpec extends AnyFunSuite {
     assert(hsStarMs < dpStarMs,
       f"hs $hsStarMs%.1f ms !< dp $dpStarMs%.1f ms")
     // clique-20: every DP family member exceeds the 3 s EnumBench
-    // budget (see ENUMBENCH.json) — pin that anytime heuristic search
-    // still returns a complete plan promptly. The bound is a
-    // load-tolerant 5 s: solo the search runs in ~0.5-1 s, but under
-    // full-suite load the old hard 2 s pin flaked (measured 2.43 s
-    // with 25 suites' GC/JIT behind it) — the property being pinned
-    // is "promptly vs DP's >3 s budget blowout", not a wall number
+    // budget (see ENUMBENCH.json). Pin that anytime heuristic search
+    // returns a complete plan while DPsubOpt, started on the same
+    // graph and cancelled after 3x the search's own time, has not
+    // finished: the bound is relative to this run, so suite load that
+    // slows both cannot flake it
     val clique = randomGraph(20, 7, "clique")
     val (hsCliqueMs, hsClique) = time(hs.enumerate(clique))
     assert(hsClique.set == (0 until 20).toSet)
-    assert(hsCliqueMs < 5000.0, f"clique-20 hs took $hsCliqueMs%.1f ms")
+    val dpDone = new java.util.concurrent.CompletableFuture[JoinTree]()
+    val dp = new Thread(() =>
+      try dpDone.complete(DPsubOpt.enumerate(clique))
+      catch { case t: Throwable => dpDone.completeExceptionally(t) })
+    dp.setDaemon(true)
+    dp.start()
+    val budgetMs = math.max(1L, math.ceil(3 * hsCliqueMs).toLong)
+    val dpFinished =
+      try { dpDone.get(budgetMs, java.util.concurrent.TimeUnit.MILLISECONDS); true }
+      catch { case _: java.util.concurrent.TimeoutException => false }
+    dp.interrupt()
+    dp.join(30000)
+    assert(!dpFinished,
+      f"clique-20 DPsubOpt finished within 3x the search's $hsCliqueMs%.1f ms")
+    assert(!dp.isAlive, "cancelled DPsubOpt did not unwind")
+    val cause = intercept[java.util.concurrent.ExecutionException](dpDone.get()).getCause
+    assert(cause.isInstanceOf[EnumerationCancelled], s"DPsubOpt ended with $cause")
   }
 
   test("GraftExtensions injects JoinReorderRule (production session wiring)") {
